@@ -64,6 +64,7 @@ def _tlog(label: str, t0: float) -> float:
     return now
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -73,11 +74,7 @@ from .operators import admission, fetch as fetch_op, schedule
 from .operators.jobtype import job_type
 from .operators.priority import priority_score
 from .state.bloom import BloomSeenSet
-from .state.snapshots import (
-    METRICS_SCHEMA,
-    PAYLOAD_WRITE_OPTIONS,
-    SnapshotStore,
-)
+from .state.snapshots import PAYLOAD_WRITE_OPTIONS, SnapshotStore
 
 
 @dataclass
@@ -342,9 +339,10 @@ def run_epoch(
     cfg: EpochConfig,
     robots_rules: DataFrame | None = None,
 ) -> dict:
-    """One scheduling epoch = 6 Spark actions (was ~8 in round 1 — the
-    per-epoch fixed cost is the scaling-efficiency denominator):
+    """One scheduling epoch = 6 Spark actions (the per-epoch fixed
+    cost is the scaling-efficiency denominator):
 
+      0. robots pin              (one collect of ``robots_rules``)
       1. fetch + payload write   (the only execution of the fetch UDF)
       2. failed-state write      ┐ threaded — planning/commit overlap;
       3. frontier-delta write    │ actions 2-5 run concurrently and
@@ -353,12 +351,26 @@ def run_epoch(
          num_buckets rows of per-bucket candidates/admitted/selected/
          ok/fail — with 4's new_frontier merged driver-side, the full
          per-partition lineage the north rule asks for)
-      6. metrics write           (driver-local rows — trivial job)
+
+    plus, when the seen filter is engaged, the candidate-Bloom build
+    and the seen-filter build or delta absorb. Those and the fetch UDF
+    are the only stages that run Python workers (the robots pin does
+    too when the caller built its rules from a Python list). The
+    metrics table (num_buckets driver-local rows) is written
+    driver-side with pyarrow, no Spark job; store reads declare their
+    schema, so building them starts no job either. The threaded
+    actions inherit the caller's job group and tags.
 
     ``visited`` is never written: it is a pruned VIRTUAL projection of
     the fetched payload table (snapshots.VIRTUAL_FROM_FETCHED), so the
     round-1 visited-delta write job is gone entirely."""
     t0 = time.time()
+    if robots_rules is not None:
+        # admit (twice) and with_slots each re-evaluate the caller's
+        # rules; a list-built DataFrame runs Python tasks every time.
+        # Pin them once as a JVM-side Arrow relation — the same
+        # driver-side copy the F.broadcast hint already makes.
+        robots_rules = spark.createDataFrame(robots_rules.toArrow())
     visited = store.read_upto("visited", epoch - 1).select("url_hash")
     failed_prev = store.read_upto("failed", epoch - 1)
     frontier = store.read_upto("frontier", epoch - 1)
@@ -539,18 +551,22 @@ def run_epoch(
         store.write_table(epoch, "frontier", emit_links(ok))
         return by_bucket(store.read_table(epoch, "frontier"), "new_frontier").collect()
 
+    def submit(fn, *args):
+        # each task gets its own copy of this thread's local properties
+        # (job group, description, tags): a shared copy would let the
+        # concurrent jobs overwrite each other's SQL execution id
+        return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
     with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [
-            pool.submit(store.write_table, epoch, "failed", failed_state, True),
-        ]
+        futs = [submit(store.write_table, epoch, "failed", failed_state, True)]
         if os.environ.get("SPARK_GRAFT_MATERIALIZE_VISITED"):
-            futs.append(pool.submit(
+            futs.append(submit(
                 store.write_table, epoch, "visited",
                 ok.select("url_hash", "url_canon", "host", "status", "depth", "priority"),
                 True,
             ))
-        frontier_fut = pool.submit(write_frontier_and_count)
-        lineage_fut = pool.submit(lineage.collect)
+        frontier_fut = submit(write_frontier_and_count)
+        lineage_fut = submit(lineage.collect)
         for f in futs:
             f.result()
         frows = frontier_fut.result()
@@ -583,9 +599,7 @@ def run_epoch(
         row["new_frontier"] = r.new_frontier
     mrows = sorted(merged.values(), key=lambda d: d["host_bucket"])
     tp = _tlog("metrics-collect", tp)
-    store.write_table(
-        epoch, "metrics", spark.createDataFrame(mrows, METRICS_SCHEMA)
-    )
+    store.write_local(epoch, "metrics", mrows)
     _tlog("metrics-write", tp)
     stats = {
         "epoch": epoch,
@@ -767,10 +781,12 @@ def recrawl(spark: SparkSession, store: SnapshotStore, urls: list[str]) -> dict:
 
     Returns {"epoch": tombstone epoch, "recrawled": #tombstones}.
     """
+    import pyarrow as pa
+
     e = store.latest_epoch() + 1
     req = dedup_candidates(
         seeds_to_frontier(
-            spark.createDataFrame([(u,) for u in urls], "url string")
+            spark.createDataFrame(pa.table({"url": pa.array(urls, pa.string())}))
         ).withColumn("attempt", F.lit(1))
     ).select("url_hash")
     visited_now = store.read_upto("visited", e - 1).select("url_hash")

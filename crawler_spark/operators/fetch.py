@@ -189,27 +189,43 @@ def _pa_fetch_schema():
     ])
 
 
+class PayloadWritePlan:
+    """The fused fetch+write of one payload partition, not yet run.
+
+    ``collect()`` runs it on the driver's behalf: clear the destination
+    (``SnapshotStore.write_table`` overwrite semantics), execute the
+    job, then sweep the temp files that killed or retried task attempts
+    left behind. It returns the 1-row-per-task file manifest
+    (``file``, ``rows``). Building a plan touches no files, so an
+    existing partition survives until the plan actually runs."""
+
+    def __init__(self, df: DataFrame, dest: Path):
+        self.df = df
+        self.dest = dest
+
+    def collect(self):
+        import shutil
+
+        shutil.rmtree(self.dest, ignore_errors=True)
+        self.dest.mkdir(parents=True)
+        files = self.df.collect()
+        # the job has finished, so no attempt of it is still writing
+        for tmp in self.dest.glob(".part-*.inprogress"):
+            tmp.unlink(missing_ok=True)
+        return files
+
+
 def fetch_write_plan(
     selected: DataFrame,
     dest: str,
     num_partitions: int | None = None,
     salt_buckets: int = 8,
     rows_per_group: int = ROWS_PER_GROUP,
-) -> DataFrame:
-    """Lazy plan that fetches ``selected`` AND writes the payload
-    parquet from inside the Python workers (see module comment above).
-
-    Returns the 1-row-per-task file-manifest DataFrame; executing it
-    (``.collect()``) runs the fused fetch+write. The destination
-    directory is cleared eagerly driver-side (same overwrite semantics
-    as ``SnapshotStore.write_table``)."""
-    import shutil
-
-    dest_dir = Path(dest)
-    if dest_dir.exists():
-        shutil.rmtree(dest_dir)
-    dest_dir.mkdir(parents=True, exist_ok=True)
-    dest_s = str(dest_dir)
+) -> PayloadWritePlan:
+    """Plan that fetches ``selected`` AND writes the payload parquet
+    from inside the Python workers (see module comment above); nothing
+    runs until its ``collect()``."""
+    dest_s = str(dest)
 
     def write_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import os
@@ -257,8 +273,11 @@ def fetch_write_plan(
             os.replace(tmp, final)
             yield pd.DataFrame({"file": [final], "rows": [rows]})
 
-    return _prepare(selected, num_partitions, salt_buckets).mapInPandas(
-        write_partition, schema="file string, rows long"
+    return PayloadWritePlan(
+        _prepare(selected, num_partitions, salt_buckets).mapInPandas(
+            write_partition, schema="file string, rows long"
+        ),
+        Path(dest),
     )
 
 

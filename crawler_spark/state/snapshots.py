@@ -14,6 +14,16 @@ per-partition lineage). Resume = read the manifest's latest committed
 epoch and load partitions epoch<=E (partition pruning keeps this a
 metadata operation + pruned scan).
 
+Reads start no Spark job: every scan declares its table's schema from
+``SCHEMAS`` (no parquet-footer inference job per read; only the
+``epoch`` partition column is discovered from the path), and an empty
+read is an Arrow-built relation, not a Python-serialized list. A
+committed partition whose directory is missing raises instead of
+reading as empty — a lost partition must never turn into a silent
+re-fetch. ``metrics`` (at most ``num_buckets`` driver-local rows) is
+written on the driver with pyarrow (``write_local``), not by a Spark
+job.
+
 This is the Iceberg-snapshot design from SURVEY §1.3 with a plain
 parquet fallback since the sandbox has no Iceberg runtime jar; the API
 (append / read_upto / latest_epoch) is kept thin so an Iceberg backend
@@ -30,9 +40,12 @@ import tempfile
 import time
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url_canon", T.StringType()),
@@ -237,10 +250,7 @@ class SnapshotStore:
 
     def read_table(self, epoch: int, name: str) -> DataFrame:
         """Read back one (possibly not-yet-committed) epoch partition."""
-        path = self.table_path(epoch, name)
-        return self.spark.read.option(
-            "basePath", str(self._table_root(name))
-        ).parquet(str(path))
+        return self._scan(name, [self.table_path(epoch, name)])
 
     def commit_epoch(self, epoch: int, names: list[str], stats: dict | None = None) -> None:
         """Atomically commit previously written tables for `epoch`."""
@@ -269,6 +279,19 @@ class SnapshotStore:
             self.write_table(epoch, name, df, rebalance=rebalance)
         self.commit_epoch(epoch, list(tables), stats)
 
+    def write_local(self, epoch: int, name: str, rows: list[dict]) -> None:
+        """Write a driver-local handful of rows as one table's epoch
+        partition with pyarrow, typed by ``SCHEMAS[name]`` — no Spark
+        job (same overwrite-without-commit contract as ``write_table``)."""
+        schema = to_arrow_schema(SCHEMAS[name])
+        path = self.table_path(epoch, name)
+        shutil.rmtree(path, ignore_errors=True)
+        path.mkdir(parents=True)
+        pq.write_table(
+            pa.Table.from_pylist(rows, schema=schema),
+            str(path / "part-00000.parquet"),
+        )
+
     # -- read ----------------------------------------------------------------
 
     def _table_root(self, table: str) -> Path:
@@ -281,14 +304,33 @@ class SnapshotStore:
             if e <= epoch and table in manifest["epochs"][str(e)]["tables"]
         )
 
+    def _scan(self, table: str, paths: list[Path]) -> DataFrame:
+        """Parquet scan with the declared schema: planning reads no
+        footers, so building the DataFrame starts no Spark job."""
+        return (
+            self.spark.read.schema(SCHEMAS[table])
+            .option("basePath", str(self._table_root(table)))
+            .parquet(*map(str, paths))
+        )
+
     def _read_epochs(self, table: str, epochs: list[int]) -> DataFrame | None:
-        paths = [str(self._table_root(table) / f"epoch={e}") for e in epochs]
-        paths = [p for p in paths if Path(p).exists()]
-        if not paths:
+        """Scan of the committed ``epochs`` of ``table`` (None if none)."""
+        if not epochs:
             return None
-        return self.spark.read.option(
-            "basePath", str(self._table_root(table))
-        ).parquet(*paths)
+        paths = [self.table_path(e, table) for e in epochs]
+        for e, p in zip(epochs, paths):
+            if not p.is_dir():
+                raise FileNotFoundError(
+                    f"committed partition {table} epoch={e} is missing: {p}"
+                )
+        return self._scan(table, paths)
+
+    def _empty(self, table: str) -> DataFrame:
+        """Zero-row ``table``, built from an empty Arrow table: a JVM
+        relation, where a Python list would run Python tasks."""
+        return self.spark.createDataFrame(
+            to_arrow_schema(SCHEMAS[table]).empty_table()
+        )
 
     def read_upto(
         self,
@@ -343,7 +385,7 @@ class SnapshotStore:
                     )
                 )
         if not parts:
-            return self.spark.createDataFrame([], SCHEMAS[table])
+            return self._empty(table)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)

@@ -1,3 +1,4 @@
+import os
 import shutil
 
 import pytest
@@ -7,7 +8,10 @@ from crawler_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(8, app_name="crawler_spark_tests", shuffle_partitions=8)
+    # never more task threads than usable CPUs; shuffle partitions stay
+    # 8 on every host, so file layouts and results do not depend on it
+    cores = min(8, len(os.sched_getaffinity(0)))
+    s = get_spark(cores, app_name="crawler_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -87,6 +87,20 @@ def test_arrow_writer_overwrite(spark, tmp_path):
     assert spark.read.parquet(str(dest)).count() == 150
 
 
+def test_building_plan_leaves_partition_intact(spark, tmp_path):
+    """The destination is cleared when the plan runs, not when it is
+    built: an unexecuted plan leaves the existing partition readable."""
+    sel = _selected(spark, n=150)
+    dest = tmp_path / "out"
+    fetch_op.fetch_write_plan(sel, str(dest), salt_buckets=2).collect()
+    before = sorted(os.listdir(dest))
+    plan = fetch_op.fetch_write_plan(sel.limit(10), str(dest), salt_buckets=2)
+    assert sorted(os.listdir(dest)) == before
+    assert spark.read.parquet(str(dest)).count() == 150
+    plan.collect()
+    assert spark.read.parquet(str(dest)).count() == 10
+
+
 def test_arrow_writer_empty_input(spark, tmp_path):
     """Zero-row epoch: no task writes a file; the driver-side fallback
     materializes a schema-carrying empty parquet so the scan works."""
